@@ -96,40 +96,88 @@ def session_shuffle_records(spark, before_execution_id: int) -> int:
     metric descriptor list repeats a node's accumulators once per AQE
     re-plan, so dedupe by accumulator id or the sweep overcounts ~6-8x.
     """
+    return _sweep(spark, before_execution_id, "shuffle records written")
+
+
+def _count_metric(value) -> int:
+    """Parse a sum-typed SQL metric rendered by the status store as a
+    plain (comma-separated) integer.
+
+    The sweeps feed exact and UPPER-bound gates (assert total <= bound),
+    so a lenient parse fails in the PERMISSIVE direction: treating an
+    unrecognized format as 0 (ADVICE r13's suggestion) or truncating
+    "2.0 KiB" to 2 would let a real map-side-combine regression pass
+    vacuously. Parse strictly and raise loudly on anything that is not a
+    leading integer — a format change should break the gate, not silence
+    it."""
+    raw = str(value).strip()
+    if re.fullmatch(r"\d[\d,]*", raw) is None:
+        raise ValueError(
+            f"unparseable SQL metric value {raw!r} — update the parser"
+        )
+    return int(raw.replace(",", ""))
+
+
+def session_generated_rows(
+    spark, before_execution_id: int, generator: str
+) -> int:
+    """Total rows emitted by the ``Generate`` nodes whose generator
+    expression starts with ``generator`` (e.g. ``"explode(shingles#"``),
+    across ALL SQL executions with id greater than
+    ``before_execution_id``.
+
+    The executed-work twin of :func:`session_shuffle_records`: it counts
+    how many times an explode actually ran over a window of actions, so a
+    gate can pin "this pass runs exactly once" without counting jobs (AQE
+    submits one job per shuffle stage, so job counts move with the plan
+    shape, not with the work). Reads each execution's plan graph, whose
+    nodes carry the generator text."""
+    return _sweep(
+        spark,
+        before_execution_id,
+        "number of output rows",
+        node_prefix=f"Generate {generator}",
+    )
+
+
+def _seq(scala_seq):
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _sweep(
+    spark, before_execution_id: int, metric_name: str, node_prefix=None
+) -> int:
+    """Sum the SQL metric ``metric_name`` over every execution with id
+    greater than ``before_execution_id``: all of an execution's metrics,
+    or only those of its plan-graph nodes whose description starts with
+    ``node_prefix``. Each execution's values come from its own tasks, so
+    an accumulator counts once per execution (its descriptor repeats
+    once per AQE re-plan) and again in any other execution that shows
+    it."""
     store = spark._jsparkSession.sharedState().statusStore()
-    lst = store.executionsList()
     total = 0
-    for i in range(lst.size()):
-        e = lst.apply(i)
-        if e.executionId() <= before_execution_id:
+    for e in _seq(store.executionsList()):
+        eid = e.executionId()
+        if eid <= before_execution_id:
             continue
-        mets = e.metrics()
-        vals = store.executionMetrics(e.executionId())
-        it = mets.iterator()
+        if node_prefix is None:
+            mets = _seq(e.metrics())
+        else:
+            mets = (
+                m
+                for node in _seq(store.planGraph(eid).allNodes())
+                if node.desc().startswith(node_prefix)
+                for m in _seq(node.metrics())
+            )
+        vals = store.executionMetrics(eid)
         seen = set()
-        while it.hasNext():
-            m = it.next()
+        for m in mets:
             acc = m.accumulatorId()
-            if m.name() == "shuffle records written" and acc not in seen:
+            if m.name() == metric_name and acc not in seen:
                 seen.add(acc)
                 v = vals.get(acc)
                 if not v.isEmpty():
-                    # 'shuffle records written' is a sum-typed metric
-                    # rendered as a plain (comma-separated) integer. The
-                    # sweep feeds UPPER-bound gates (assert total <=
-                    # bound), so a lenient parse fails in the PERMISSIVE
-                    # direction: treating an unrecognized format as 0
-                    # (ADVICE r13's suggestion) or truncating "2.0 KiB"
-                    # to 2 would let a real map-side-combine regression
-                    # pass vacuously. Parse strictly and raise loudly on
-                    # anything that is not a leading integer — a format
-                    # change should break the gate, not silence it
-                    # (r14 code review, refining the ADVICE fix).
-                    raw = str(v.get()).strip()
-                    if re.fullmatch(r"\d[\d,]*", raw) is None:
-                        raise ValueError(
-                            "session_shuffle_records: unparseable "
-                            f"metric value {raw!r} — update the parser"
-                        )
-                    total += int(raw.replace(",", ""))
+                    total += _count_metric(v.get())
     return total

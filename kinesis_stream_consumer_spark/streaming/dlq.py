@@ -122,7 +122,15 @@ def append_to_queue(
     envelope count from the batch counters) sizes the write: a micro-batch
     rejecting a few hundred messages writes one file instead of one
     near-empty file per upstream partition. coalesce never widens, so a
-    large envelope set keeps its full parallelism — ~5k rows/file."""
+    large envelope set keeps its full parallelism — ~5k rows/file.
+
+    Not atomic: the session's committer algorithm v2 (session.py) moves
+    each task's files into ``path`` at task commit, so an append that
+    fails midway can leave some of its envelopes visible, and the replay
+    appends them again. The DRQ/DMQ contract is at-least-once delivery,
+    which covers that. A sink that needs exactly-once appends must not
+    inherit this: write through a per-write staging directory (or a
+    transactional table format) or scope algorithm v1 to it."""
     if n_rows is not None:
         envelopes = envelopes.coalesce(max(1, 1 + n_rows // 5000))
     envelopes.write.mode("append").parquet(path)

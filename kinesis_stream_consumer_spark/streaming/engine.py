@@ -89,6 +89,42 @@ _FINAL_SCHEMA = T.StructType(
 
 _PASS_COLS = [n for n, _ in _PASSTHROUGH]
 
+# Python-stage sizing (phase-1 fan-out with the KPL pandas_udf, phase-2
+# exec mapInPandas). Every Python task pays a fixed 0.18-0.37 s before its
+# first row — pyspark's worker calls importlib.invalidate_caches() at each
+# task start and the worker's zipimporters then re-read their archives
+# (measured on local[4], Spark 4.1.2, Python 3.11) — while the exec fn
+# needs about 0.1 ms per row. A wave of tasks therefore costs a fixed
+# ~0.3 s however few rows it carries, and a rows-per-task floor that adds
+# waves multiplies it (the old 500 rows/task ran a 5k batch as 11 tasks
+# in 3 waves on 4 slots, ~0.35 s of each ~0.4 s task being that fixed
+# cost). So a stage gets whole waves of task slots, and only one wave
+# until a task would carry more than _ROWS_PER_TASK rows, where its row
+# work reaches the fixed cost; past that, further waves buy balance
+# across skewed chains.
+#
+# Inside a wave, tasks are trimmed to at least _MIN_ROWS_PER_TASK rows
+# each. An A/B on a 32-core host measured a 5k batch's exec stage at
+# 1.17 s as 32 tasks of ~156 rows vs 0.80 s as 11 tasks of 500, and its
+# ingest at 0.46 s with a fan-out of 32 vs 0.36 s with 8: below ~500 rows
+# a task's scheduling and Arrow costs outweigh the extra width. That trim
+# never adds a wave, so at 4 slots a 5k batch still runs 4 tasks; hosts
+# with 8-32 slots get 8-10 tasks, which is the 32-core A/B's best point
+# but has not been re-measured under this rule.
+_ROWS_PER_TASK = 2500
+_MIN_ROWS_PER_TASK = 500
+
+
+def _stage_tasks(n_rows: int, slots: int, width: int) -> int:
+    """Task count for a Python stage over about ``n_rows`` rows: whole
+    waves of ``slots`` tasks, one wave until a task would carry more than
+    _ROWS_PER_TASK rows, no more tasks than give each _MIN_ROWS_PER_TASK
+    rows, capped at the session's shuffle ``width`` (so a big batch still
+    reaches full width)."""
+    waves = max(1, -(-n_rows // (slots * _ROWS_PER_TASK)))
+    need = max(1, -(-n_rows // _MIN_ROWS_PER_TASK))
+    return min(width, slots * waves, need)
+
 
 class BatchReplayError(RuntimeError):
     """F1: incomplete messages remain — fail the batch so the source replays
@@ -112,10 +148,9 @@ class BatchResult:
     rejected_to_dmq: int
     discarded_to_drq: int
     incomplete: int
-    # exec-stage width this batch ran at: min(session shuffle width,
-    # ~rows/500) — the scale-soak test pins that a big batch reaches full
-    # cluster width (the "sizing is a no-op at scale" claim, engine.py
-    # phase-2 sizing comment)
+    # exec-stage width this batch ran at (_stage_tasks): one wave of task
+    # slots for a micro-batch, the session's full shuffle width for a big
+    # batch — tests/test_engine.py and the scale-soak test pin both ends
     exec_partitions: int = 0
 
 
@@ -778,12 +813,15 @@ class Engine:
         # would fuse onto that single task. Fan the raw records out first;
         # the records are small (the shuffle moves the undecoded strings
         # once) and a source that already delivers wide input skips this.
-        # fan=8 beats defaultParallelism here (A/B r5: steady ingest 0.36 s
-        # at 8 tasks vs 0.46 s at 32 on 5k-row micro-batches — per-task
-        # scheduling beats the extra width at this size; a big batch from a
-        # checkpointed source already arrives wide and skips this branch).
+        # The fan-out is sized like the exec stage (_stage_tasks), from the
+        # previous batch's record count: steady micro-batches are
+        # same-sized, and with no (or an empty) batch on record the fan is
+        # one wave.
         width = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        fan = min(8, width)
+        slots = self.spark.sparkContext.defaultParallelism
+        fan = _stage_tasks(
+            self._last_n_records or slots * _ROWS_PER_TASK, slots, width
+        )
         if records.rdd.getNumPartitions() < fan:
             records = records.repartition(fan)
         _mark("fan_probe")
@@ -925,21 +963,12 @@ class Engine:
                 if maybe is not None:
                     revived = maybe
             _mark("p2_revive_build")
-            # Size the chain shuffle to the batch: 32 near-empty
-            # partitions × two Python stages is pure scheduling overhead
-            # at micro-batch sizes; a big batch still fans out to the
-            # session's full shuffle width (so this is a no-op at cluster
-            # scale). The exec stage is the batch's dominant CPU
-            # (task-tree parse + user fns + finalise per message,
-            # ~0.3-0.5 ms/row), so ~500 rows/task keeps the stage wide
-            # while each task's ~150-250 ms of row work still dwarfs its
-            # warm-worker Arrow/scheduling cost. A/B-measured r5 (VERDICT
-            # r4 #7 asked): batch/defaultParallelism sizing (32 ×
-            # ~156-row tasks for a 5k batch) ran the steady-state exec at
-            # 1.17 s vs 0.80 s for 11 × 500-row tasks — per-task
-            # Python/Arrow overhead beats the extra width below ~500
-            # rows/task, so the floor stays.
-            n_parts = max(4, min(width, (n_rec_est // 500) + 1))
+            # Size the chain shuffle to the batch (_stage_tasks): one wave
+            # of task slots for a micro-batch, the session's full shuffle
+            # width for a big batch. No rows-per-task floor that adds
+            # waves: each exec task pays the fixed Python-task start cost
+            # noted there.
+            n_parts = _stage_tasks(n_rec_est, slots, width)
             if cfg.sequencing_required:
                 # co-locate each chain, order within partition by THE
                 # shared comparator (sequencing.chain_order_columns — the
@@ -1025,8 +1054,8 @@ class Engine:
         # Cold-start overlap: a brand-new state dir means the prior slice
         # is provably empty for EVERY shard, so the optimistic plan is
         # valid regardless of which shards the batch turns out to touch.
-        # Task sizing falls back to full session width (scale-safe; a
-        # micro-batch pays slightly wider-than-ideal tasks exactly once).
+        # Task sizing treats the size as unknown and runs full session
+        # width (scale-safe; a micro-batch pays extra waves exactly once).
         cold_overlap = (
             not warm_overlap and cache is None and self.state.is_empty()
         )
@@ -1065,7 +1094,8 @@ class Engine:
                 prior_src = empty_prior.where(
                     F.col("kind").isin("message", "rejected")
                 )
-                est = width * 500
+                # size unknown: an estimate _stage_tasks maps to full width
+                est = width * _ROWS_PER_TASK
             overlap = _build_phase2(prior_src, est)
             # split attribution (VERDICT r7 #1 spirit): overlap_plan is the
             # driver-side Catalyst/py4j build; overlap_stats_wait is how
@@ -1246,14 +1276,21 @@ class Engine:
         msg_states = finalised.select(
             *self._t4_msg_head, batch_id_col, *self._t4_tail
         )
-        unusable_states = unusable.select(
-            *self._t4_unusable_head, batch_id_col, *self._t4_tail
-        )
         default_saved = False
         if obs is not None or n_messages or n_unusable:
             # T4 seam: saveBatchState (default parquet MERGE upsert,
             # kinesis-processing.js:295 saveBatchStateToDynamoDB)
-            states = msg_states.unionByName(unusable_states)
+            states = msg_states
+            if n_unusable:
+                # only when the stats job counted some: an empty branch
+                # still scans the phase-1 checkpoint in `fan` tasks, which
+                # the save job (and the revive-slice checkpoint built from
+                # `states`) would launch ahead of the exec tasks
+                states = states.unionByName(
+                    unusable.select(
+                        *self._t4_unusable_head, batch_id_col, *self._t4_tail
+                    )
+                )
             if (
                 cfg.track_distinct_sketch
                 and cfg.save_batch_state is None

@@ -116,7 +116,17 @@ class StateStore:
         a store, checkpoint eagerly before save (engine fallback) or use a
         transactional table format (Delta MERGE).
         ``tests/test_engine.py::test_fused_save_overwrite_under_read``
-        pins the single-counted-attempts behavior."""
+        pins the single-counted-attempts behavior.
+
+        COMMITTER ALGORITHM v2 (session.py): each task moves its output
+        into the destination at TASK commit, so a job that fails midway
+        can leave the files of its committed tasks visible. This save is
+        unaffected — dynamic partition overwrite stages every task's
+        output under .spark-staging-* and swaps partitions in only at
+        commitJob. Plain appends that share the session setting are not:
+        a failed DRQ/DMQ append can leave its task-committed files
+        visible. At-least-once DLQ delivery covers that; a future
+        exactly-once sink must not inherit it (see dlq.append_to_queue)."""
         slim = states.select(*[f.name for f in STATE_SCHEMA.fields])
         slim = (
             slim.repartition(n_partitions, "streamConsumerId", "shardOrEventID")

@@ -711,6 +711,37 @@ def test_giant_single_chain_hot_key(spark, tmp_path):
     assert hot_rows.count() == 3000 + natural
 
 
+def test_micro_batch_exec_runs_in_one_wave(spark, tmp_path):
+    """Python-stage sizing: a steady 5k-message micro-batch runs its exec
+    stage in ONE wave of task slots (at most defaultParallelism tasks).
+    Every Python task pays a fixed start cost before its first row, so a
+    rows-per-task floor (500 rows/task ran a 5k batch as 11 tasks, 3
+    waves on 4 slots) buys extra waves of that cost and no speed. The
+    first batch on a new state dir has no size on record and runs at full
+    shuffle width; the next one sizes from the first one's count."""
+    from tests.conftest import SF_CORRECT
+
+    from kinesis_stream_consumer_spark.plans.queries import _t
+
+    ev = _t(spark, SF_CORRECT, "events")
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    eng = make_engine(spark, tmp_path, one_defs=[TaskDef("t1", noop)])
+
+    def batch(lo, batch_id):
+        recs = events_as_kinesis_records(
+            ev.where(F.col("event_id").between(lo, lo + 4999))
+        )
+        return eng.process_batch(recs, batch_id=batch_id)
+
+    assert batch(0, 0).exec_partitions == width
+    res = batch(5000, 1)
+    assert res.messages == 5000
+    assert res.fully_finalised == 5000
+    assert res.exec_partitions <= spark.sparkContext.defaultParallelism, (
+        res.exec_partitions
+    )
+
+
 def test_multi_batch_chaos_soak(spark, tmp_path):
     """Soak the full lifecycle over 3 DISJOINT batches (the real Kinesis
     shape: committed batches never re-deliver) with a scripted mix of

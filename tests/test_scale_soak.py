@@ -7,8 +7,9 @@ Run with:  SPARK_GRAFT_SOAK=1 python -m pytest tests/test_scale_soak.py -q
 
 Asserts:
 - the exec stage runs at FULL session width for a big batch (the
-  "micro-batch sizing is a no-op at cluster scale" claim,
-  engine.py phase-2 sizing comment): exec_partitions == shuffle width;
+  Python-stage sizing rule, engine._stage_tasks, gives a micro-batch one
+  wave of task slots and caps a big batch's waves at the shuffle width):
+  exec_partitions == shuffle width;
 - every message is processed exactly once (messages == distinct ids);
 - per-section times scale sub-quadratically from 50k → 200k (4× rows
   must stay under a generous 10× per section — catches an accidental
@@ -112,8 +113,9 @@ def test_200k_batch_full_width_linear_sections(spark, tmp_path):
     res = eng_big.process_batch(recs_big, 0)
     t_big = dict(eng_big.last_section_times)
 
-    # full cluster width for a big batch — the 500-rows/task floor only
-    # bites micro-batches
+    # full cluster width for a big batch — Python stages get whole waves
+    # of task slots, one wave only while a task carries at most 2,500 rows,
+    # capped at the shuffle width
     assert res.exec_partitions == width, (res.exec_partitions, width)
     assert res.messages == 200_000
     assert res.fully_finalised == 200_000
